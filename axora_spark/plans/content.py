@@ -143,12 +143,15 @@ def make_content_sink(cfg: CrawlConfig):
                 skip_empty=True)
             docs = docs.join(assigns.select("doc_id"),
                              "doc_id", "left_anti")
+        chunks = None
         try:
             catalog.merge_insert_if_absent(
                 spark, "documents",
                 docs.select("doc_id", "url", "spans", "metadata"),
                 key="doc_id")
-            chunks = chunks_from_documents(docs, cfg)
+            # the chunks append and the vectors merge both read it: keep
+            # the chunker + token counter to one pass per wave
+            chunks = chunks_from_documents(docs, cfg).persist()
             catalog.append(spark, "chunks",
                            chunks.select("doc_id", "chunk_index", "text",
                                          "token_count"))
@@ -157,6 +160,8 @@ def make_content_sink(cfg: CrawlConfig):
                                            key="content_hash")
         finally:
             raw_docs.unpersist()
+            if chunks is not None:
+                chunks.unpersist()
             if assigns is not None:
                 # the dedup_ingest contract: the caller releases the
                 # eager assigns checkpoint once the sinks consumed it —

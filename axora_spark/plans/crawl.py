@@ -541,7 +541,6 @@ def run_crawl(spark: SparkSession, catalog: SnapshotCatalog, cfg: CrawlConfig,
                          .select("host",
                                  (F.col("_pre") - F.col("_post"))
                                  .alias("deduped")))
-        union.unpersist()
         cand_by_host = candidates.groupBy("host").agg(
             F.count("*").alias("candidates"))
         adm_by_host = admitted.groupBy("host").agg(
@@ -554,6 +553,7 @@ def run_crawl(spark: SparkSession, catalog: SnapshotCatalog, cfg: CrawlConfig,
                        (F.col("candidates") - F.col("admitted")).alias("deferred"),
                        F.col("deduped").cast("long")))
         sid_met = catalog.append(spark, "metrics", met)
+        union.unpersist()        # pre_by_host reads it until this commit
 
         frontier_meta = catalog.snapshots("frontier")[-1]
         lineage_entries = [

@@ -25,6 +25,14 @@ def get_spark(
     count in local mode (the guide's "~cores for local" rule); on a real
     cluster it should be ~2-3× total cores and is overridable via
     ``extra_conf``.
+
+    When this call launches a ``local[...]`` master itself, Python tasks
+    fork from ``axora_spark.pyworker`` (``spark.python.daemon.module``),
+    which skips the per-task re-read of Spark's own pyspark/py4j zips
+    (~0.2 s a task; SCALE.md, "Python worker cost"). Under spark-submit
+    or a cluster master Spark's default daemon stays: there the daemon
+    starts before ``--py-files`` are on its path and cannot import the
+    package.
     """
     # Under spark-submit the python driver is launched by an already-running
     # JVM gateway (PYSPARK_GATEWAY_PORT) whose conf carries --master; calling
@@ -79,6 +87,10 @@ def get_spark(
     )
     if master is not None:
         builder = builder.master(master)
+        if not submitted:
+            # the PYTHONPATH export above reaches the JVM this call starts
+            builder = builder.config("spark.python.daemon.module",
+                                     "axora_spark.pyworker")
     if n_cores is not None:
         builder = builder.config("spark.default.parallelism", str(n_cores))
     if shuffle_partitions is not None:

@@ -71,3 +71,20 @@ def test_vectors_idempotent_and_keyed(spark, crawled, cfg):
     row = vecs.select("embedding").first()
     assert len(row.embedding) == cfg.embedding_dim
     assert math.isclose(sum(x * x for x in row.embedding), 1.0, rel_tol=1e-3)
+
+
+def test_crawl_with_content_and_seen_filters_releases_storage(
+        spark, catalog, cfg, fixture_pages):
+    # diff SETS of persisted RDD ids (ContextCleaner-race-proof, as in
+    # test_incremental): every per-wave persist — the discovered∪deferred
+    # union, the content sink's chunks, the seen filters — is released
+    def persisted_ids():
+        m = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in m.keySet().toArray()}
+
+    corpus = spark.createDataFrame(fixture_pages, schemas.LINK_GRAPH)
+    before = persisted_ids()
+    run = crawl.run_crawl(spark, catalog, cfg, corpus, bloom_threshold=0,
+                          content_sink=content.make_content_sink(cfg))
+    assert run.waves_run > 1
+    assert persisted_ids() - before == set()
