@@ -132,7 +132,7 @@ class CrawlConfig:
                                     # (operators/adaptive.py, the Heritrix
                                     # delay-factor analog): EWMA the
                                     # crawl's own per-host fetch latency
-                                    # into delay = max(delay_factor·est,
+                                    # into delay = max(DELAY_FACTOR·est,
                                     # per_host_delay_s) and derive next
                                     # wave's budget from THAT delay —
                                     # slow hosts throttle, the static
@@ -142,9 +142,6 @@ class CrawlConfig:
                                     # measure it; fixture corpora may
                                     # declare it); waves/hosts without
                                     # observations use the static budget
-    adaptive_delay_factor: float = 2.0  # politeness delay as a multiple
-                                    # of observed latency (Heritrix's
-                                    # delayFactor default)
     seen_bloom_fpp: float = 0.01
     hot_host_salt: int = 8          # salt shards for skewed hosts (W1)
 

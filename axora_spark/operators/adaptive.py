@@ -46,6 +46,11 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# politeness delay as a multiple of the observed latency (Heritrix's
+# delayFactor default); the crawl, its oracle and the prior (static
+# delay / DELAY_FACTOR) all use this one value
+DELAY_FACTOR = 2.0
+
 
 def observe_fetches(fetched: DataFrame, wave: int) -> DataFrame:
     """(host, wave, sum_ms, n) partial-aggregate rows for one wave's
@@ -86,7 +91,7 @@ def _budget_col(est: Column, num_ms: float, delay_factor: float,
 
 
 def latency_budgets(obs: DataFrame, num_ms: float,
-                    delay_factor: float = 2.0, alpha: float = 0.5,
+                    delay_factor: float = DELAY_FACTOR, alpha: float = 0.5,
                     prior_ms: float = 2500.0, min_delay_ms: float = 100.0,
                     min_budget: int = 1,
                     max_budget: int | None = None) -> DataFrame:
@@ -111,7 +116,7 @@ def latency_budgets(obs: DataFrame, num_ms: float,
 
 
 def latency_budget_py(means: list[tuple[int, float]], num_ms: float,
-                      delay_factor: float = 2.0, alpha: float = 0.5,
+                      delay_factor: float = DELAY_FACTOR, alpha: float = 0.5,
                       prior_ms: float = 2500.0, min_delay_ms: float = 100.0,
                       min_budget: int = 1,
                       max_budget: int | None = None) -> int:
@@ -178,7 +183,7 @@ def merge_latency_state(state: DataFrame, wave_obs: DataFrame,
 
 
 def budgets_from_state(state: DataFrame, num_ms: float,
-                       delay_factor: float = 2.0,
+                       delay_factor: float = DELAY_FACTOR,
                        min_delay_ms: float = 100.0, min_budget: int = 1,
                        max_budget: int | None = None,
                        delay_floors: DataFrame | None = None) -> DataFrame:
@@ -216,7 +221,7 @@ def fold_latency_py(est: float | None, mean_ms: float,
 
 
 def budget_from_est_py(est: float, num_ms: float,
-                       delay_factor: float = 2.0,
+                       delay_factor: float = DELAY_FACTOR,
                        min_delay_ms: float = 100.0, min_budget: int = 1,
                        max_budget: int | None = None) -> int:
     """Pure-Python twin of budgets_from_state for one host."""

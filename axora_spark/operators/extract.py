@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from axora_spark.config import CrawlConfig
 from axora_spark.operators.filters import apply_frontier_filters
+from axora_spark.operators.priority import priority_col
 from axora_spark.operators.urls import absolutize_udf, canonicalize_udf, url_hash, host_col
 
 
@@ -38,14 +39,10 @@ def links_from_fetched(fetched: DataFrame, cfg: CrawlConfig, wave: int
              .withColumn("host", host_col(F.col("url")))
              .select("url", "host", "depth"))
     cands = apply_frontier_filters(cands, cfg)
-    if cfg.priority_mode == "url_score":
-        from axora_spark.operators.priority import url_priority_col
-        prio = url_priority_col(F.col("url"), F.col("depth"))
-    else:
-        prio = F.lit(0.0)
     return (cands
             .withColumn("url_hash", url_hash(F.col("url")))
-            .withColumn("priority", prio)
+            .withColumn("priority",
+                        priority_col(cfg, F.col("url"), F.col("depth")))
             .withColumn("discovered_wave", F.lit(wave + 1))
             .withColumn("status", F.lit("pending")))
 

@@ -29,8 +29,12 @@ Deterministic order: priority DESC, url ASC (W4 tie-break).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from axora_spark.config import CrawlConfig
+from axora_spark.operators import adaptive
+from axora_spark.operators.robots import HostRules, host_budget_with_robots
 
 
 def _order_cols():
@@ -47,7 +51,7 @@ def salted_topk(df: DataFrame, budget, salt: int) -> DataFrame:
     Returns df + `rank` (1-based per host by _order_cols), filtered to
     rank ≤ budget. Pass `budget` as a literal int to get
     WindowGroupLimit (per-partition top-k pruning BEFORE each sort
-    exchange) in BOTH windows; a Column budget (overrides/caps) trades
+    exchange) in BOTH windows; a Column budget (per-host overrides) trades
     that for per-row limits."""
     salted = df.withColumn(
         "_salt", F.pmod(F.col("url_hash"), F.lit(salt)).cast("int"))
@@ -62,93 +66,115 @@ def salted_topk(df: DataFrame, budget, salt: int) -> DataFrame:
     return ranked.filter(F.col("rank") <= budget)
 
 
+def host_budgets(spark: SparkSession, cfg: CrawlConfig,
+                 robots_rules: dict[str, HostRules] | None = None,
+                 admitted: DataFrame | None = None,
+                 fetch_state: DataFrame | None = None
+                 ) -> tuple[int, DataFrame | None]:
+    """THE per-host budget policy of one wave: (default_budget, budgets)
+    for ``admit(frontier, default_budget, budget_overrides=budgets)``.
+
+    Sources — a host's budget is the SMALLEST (most polite) of its
+    robots crawl-delay budget (`robots_rules`) and its latency-adaptive
+    budget (cfg.adaptive_politeness, from `fetch_state`), else
+    cfg.host_budget. The adaptive delay is floored at the host's OWN
+    robots delay (else the static delay), so a robots-fast host keeps
+    its raised budget unless its observed latency says otherwise.
+
+    Quota — with cfg.domain_quota, the remaining quota (quota minus the
+    host's rows in `admitted`) caps every host. A host with no history
+    is absent from `admitted` and has the whole quota left, so the
+    default is min(host_budget, quota) (ADVICE r5: an uncapped default
+    let a new host's first wave blow through the quota).
+
+    `budgets` is a (host, _budget) frame over the hosts with a source
+    or history (the robots-table cardinality class, broadcast by
+    admit), or None when nothing overrides the default — which keeps
+    admit on its literal-budget plan. Pass `admitted` only with a quota
+    and `fetch_state` only in adaptive mode."""
+    cols = ("_robots", "_adaptive", "_cap")
+
+    def source(df: DataFrame, col: str, value: Column) -> DataFrame:
+        return df.select("host", *[
+            (value if c == col else F.lit(None)).cast("int").alias(c)
+            for c in cols])
+
+    delays = {h: r.crawl_delay for h, r in (robots_rules or {}).items()
+              if r.crawl_delay}
+    parts: list[DataFrame] = []
+    if delays:
+        parts.append(source(spark.createDataFrame(
+            [(h, host_budget_with_robots(cfg.host_budget, cfg.wave_seconds,
+                                         cfg.per_host_parallelism, d))
+             for h, d in delays.items()], "host string, b int"),
+            "_robots", F.col("b")))
+    if cfg.adaptive_politeness:
+        floors = spark.createDataFrame(
+            [(h, d * 1000.0) for h, d in delays.items()],
+            "host string, _floor_ms double") if delays else None
+        parts.append(source(adaptive.budgets_from_state(
+            fetch_state,
+            num_ms=cfg.per_host_parallelism * cfg.wave_seconds * 1000.0,
+            min_delay_ms=cfg.per_host_delay_s * 1000.0,
+            delay_floors=floors), "_adaptive", F.col("_budget")))
+    default = cfg.host_budget
+    if cfg.domain_quota is not None:
+        default = min(default, cfg.domain_quota)
+        parts.append(source(
+            admitted.groupBy("host").agg(F.count("*").alias("n")), "_cap",
+            F.greatest(F.lit(0), F.lit(cfg.domain_quota) - F.col("n"))))
+    if not parts:
+        return default, None
+    table = parts[0]
+    for p in parts[1:]:
+        table = table.unionByName(p)
+    if len(parts) > 1:
+        # one row per host: each source filled only its own column
+        table = table.groupBy("host").agg(*[F.min(c).alias(c) for c in cols])
+    # F.least skips nulls: one source → its budget, both → the smaller
+    budget = F.coalesce(F.least("_robots", "_adaptive"),
+                        F.lit(cfg.host_budget))
+    if cfg.domain_quota is not None:
+        budget = F.least(budget, F.coalesce(F.col("_cap"),
+                                            F.lit(cfg.domain_quota)))
+    return default, table.select("host", budget.alias("_budget"))
+
+
 def admit(frontier: DataFrame, host_budget: int, salt: int = 8,
-          budget_overrides: dict[str, int] | None = None,
-          budget_caps: DataFrame | None = None,
-          budget_frame: DataFrame | None = None,
-          cap_default: int | None = None
+          budget_overrides: dict[str, int] | DataFrame | None = None
           ) -> tuple[DataFrame, DataFrame]:
     """Split a wave's candidate frontier into (admitted, deferred).
 
     admitted carries `rank` (1-based, per host, deterministic);
     deferred is the remainder, untouched.
 
-    budget_overrides: per-host budget (robots crawl-delay, target mode) —
-    a tiny map, broadcast-joined; absent hosts use `host_budget`.
+    budget_overrides: per-host budgets — a host → int dict or a
+    (host, _budget) frame (the table host_budgets builds), broadcast-
+    joined; hosts absent from it use `host_budget`.
 
-    budget_frame: per-host budget as a (host, _budget) DATAFRAME computed
-    distributed (latency-adaptive politeness, operators/adaptive.py —
-    cardinality = hosts-with-fetch-history, the robots-table class, so
-    broadcast). Composition with overrides is MOST-POLITE-WINS: a host
-    present in both uses the SMALLER budget (robots' crawl-delay is a
-    floor on politeness, not a license to exceed what the host's
-    observed latency can serve); hosts in neither use host_budget.
-
-    The no-override path compares ranks against the LITERAL budget, not
-    a `_budget` column: a row_number filter against a foldable constant
-    lets Spark insert WindowGroupLimit — a per-partition top-k pruning
-    pass BEFORE the window sort/exchange — while a column-vs-column
-    comparison disables it (this was the r2→r3 politeness_rank
-    regression: the override plumbing added a constant `_budget` column
-    even when no overrides existed; plan-gated now)."""
-    use_cols = bool(budget_overrides) or budget_caps is not None \
-        or budget_frame is not None
-    srcs: list = []
-    if budget_overrides:
-        spark = frontier.sparkSession
-        bdf = spark.createDataFrame(
+    Without overrides the ranks are compared against the LITERAL
+    budget, not a `_budget` column: a row_number filter against a
+    foldable constant lets Spark insert WindowGroupLimit — a
+    per-partition top-k pruning pass BEFORE the window sort/exchange —
+    while a column-vs-column comparison disables it (this was the
+    r2→r3 politeness_rank regression: the override plumbing added a
+    constant `_budget` column even when no overrides existed;
+    plan-gated now)."""
+    if isinstance(budget_overrides, dict):
+        budget_overrides = frontier.sparkSession.createDataFrame(
             [(h, int(b)) for h, b in budget_overrides.items()],
-            "host string, _ovr int")
-        frontier = frontier.join(F.broadcast(bdf), on="host", how="left")
-        srcs.append(F.col("_ovr"))
-    if budget_frame is not None:
-        frontier = frontier.join(
-            F.broadcast(budget_frame
-                        .select("host", F.col("_budget").alias("_abud"))),
-            on="host", how="left")
-        srcs.append(F.col("_abud"))
-    if srcs:
-        # F.least skips nulls: host in one source → that budget, in
-        # both → the smaller (most polite), in neither → the default
-        frontier = (frontier
-                    .withColumn("_budget",
-                                F.coalesce(F.least(*srcs)
-                                           if len(srcs) > 1 else srcs[0],
-                                           F.lit(host_budget)))
-                    .drop("_ovr", "_abud"))
-        budget = F.col("_budget")
-    elif use_cols:
-        frontier = frontier.withColumn("_budget", F.lit(host_budget))
-        budget = F.col("_budget")
+            "host string, _budget int") if budget_overrides else None
+    if budget_overrides is None:
+        admitted = salted_topk(frontier, F.lit(host_budget), salt)
     else:
-        budget = F.lit(host_budget)
-    if budget_caps is not None:
-        # per-host remaining-quota CAP (cumulative domain quotas,
-        # plans/crawl.py): a (host, _cap) frame computed DISTRIBUTED by
-        # the caller — broadcast here because its cardinality is
-        # #hosts-with-history, the same class as the robots rules table.
-        # Hosts ABSENT from the frame default to cap_default — callers
-        # deriving caps from an admitted-history table MUST pass the
-        # full quota here, because a zero-history host is absent from
-        # that table and an INT_MAX default let its first wave blow
-        # straight through domain_quota (ADVICE r5 high: 6 admitted vs
-        # the oracle's 2). cap_default=None keeps absent hosts uncapped
-        # for callers whose frame covers every capped host by design.
-        frontier = (frontier.join(
-            F.broadcast(budget_caps.select("host", "_cap")),
-            on="host", how="left")
-            .withColumn("_budget",
-                        F.least(budget,
-                                F.coalesce(F.col("_cap"),
-                                           F.lit(cap_default
-                                                 if cap_default is not None
-                                                 else 2**31 - 1))))
-            .drop("_cap"))
-        budget = F.col("_budget")
-
-    admitted = salted_topk(frontier, budget, salt)
-    if use_cols:
-        admitted = admitted.drop("_budget")
+        frontier = (frontier
+                    .join(F.broadcast(budget_overrides
+                                      .select("host", "_budget")),
+                          on="host", how="left")
+                    .withColumn("_budget", F.coalesce(F.col("_budget"),
+                                                      F.lit(host_budget))))
+        admitted = salted_topk(frontier, F.col("_budget"), salt) \
+            .drop("_budget")
         frontier = frontier.drop("_budget")
     # Deferred = everything not admitted. Anti-join on url_hash (unique per
     # wave after frontier dedup) keeps this a co-partitioned hash join.

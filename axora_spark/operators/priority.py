@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from axora_spark.config import CrawlConfig
 from axora_spark.functions import urlnorm
 
 
@@ -31,3 +32,12 @@ def url_priority_col(url: Column, depth: Column) -> Column:
 def url_priority_py(url: str, depth: int) -> float:
     path_len = len(urlnorm.path_of(url))
     return 1.0 / (1.0 + depth) + 1.0 / (1.0 + path_len)
+
+
+def priority_col(cfg: CrawlConfig, url: Column, depth: Column) -> Column:
+    """Priority of a newly discovered frontier row: the url_score
+    heuristic in that mode, else 0.0 (compat mode; pagerank mode
+    re-scores the whole next frontier after discovery)."""
+    if cfg.priority_mode == "url_score":
+        return url_priority_col(url, depth)
+    return F.lit(0.0)

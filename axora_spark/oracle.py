@@ -143,10 +143,12 @@ def simulate(pages: list[dict], cfg: CrawlConfig,
     # latency-adaptive politeness twin: host -> folded EWMA est_ms
     # (mirrors the engine's O(hosts) fetch_state table, not a log)
     lat_est: dict[str, float] = {}
-    _adaptive_num_ms = (cfg.per_host_parallelism * cfg.wave_seconds
-                        * 1000.0)
-    _adaptive_prior = (cfg.per_host_delay_s * 1000.0
-                       / cfg.adaptive_delay_factor)
+    if cfg.adaptive_politeness:
+        from axora_spark.operators import adaptive
+        _adaptive_num_ms = (cfg.per_host_parallelism * cfg.wave_seconds
+                            * 1000.0)
+        _adaptive_prior = (cfg.per_host_delay_s * 1000.0
+                           / adaptive.DELAY_FACTOR)
     link_edges: set[tuple[str, str]] = set()  # priority_mode="pagerank"
     ranks_cache: dict[str, float] = {}        # committed rank table twin
     admitted_log: list[tuple[int, str, int, str, int]] = []
@@ -175,25 +177,22 @@ def simulate(pages: list[dict], cfg: CrawlConfig,
         admitted: list[tuple[str, str, int]] = []  # (host, url, rank)
         deferred: dict[str, tuple[int, float, int]] = {}
         for host, urls in by_host.items():
-            # most-polite-wins, mirroring politeness.admit's
-            # least(): robots override and adaptive budget compose by
-            # MIN when both exist; neither → static default
+            # most-polite-wins, mirroring politeness.host_budgets:
+            # robots override and adaptive budget compose by MIN when
+            # both exist; neither → static default
             cands: list[int] = []
             if host in budget_override:
                 cands.append(budget_override[host])
             if cfg.adaptive_politeness and host in lat_est:
-                from axora_spark.operators.adaptive import \
-                    budget_from_est_py
-                cands.append(budget_from_est_py(
+                cands.append(adaptive.budget_from_est_py(
                     lat_est[host], num_ms=_adaptive_num_ms,
-                    delay_factor=cfg.adaptive_delay_factor,
                     # per-host floor: robots crawl-delay where declared
                     min_delay_ms=robots_delays_ms.get(
                         host, cfg.per_host_delay_s * 1000.0)))
             budget = min(cands) if cands else cfg.host_budget
             if cfg.domain_quota is not None:
-                # cumulative per-host cap (engine: politeness.admit
-                # budget_caps joined from the admitted table)
+                # cumulative per-host cap (engine: host_budgets' quota
+                # cap from the admitted table)
                 budget = min(budget,
                              max(0, cfg.domain_quota
                                  - host_admitted.get(host, 0)))
@@ -255,9 +254,8 @@ def simulate(pages: list[dict], cfg: CrawlConfig,
                 if page is not None and page.get("fetch_ms") is not None:
                     per_host_ms.setdefault(host, []).append(
                         int(page["fetch_ms"]))
-            from axora_spark.operators.adaptive import fold_latency_py
             for h, vals in per_host_ms.items():
-                lat_est[h] = fold_latency_py(
+                lat_est[h] = adaptive.fold_latency_py(
                     lat_est.get(h), sum(vals) / len(vals),
                     prior_ms=_adaptive_prior)
         if cfg.domain_quota is not None:

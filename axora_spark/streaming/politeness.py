@@ -96,8 +96,9 @@ def politeness_stream(urls: DataFrame, budget: int = 5,
     (operators/adaptive.latency_budgets); joined stream-static onto the
     URL stream so each host meters at its own rate (hosts absent from
     the frame use `budget`). This is the continuous twin of W1's
-    budget_frame seam: rate derivation stays a batch job on the
-    fetch_state table, the stream only METERS — the same
+    per-host budget table (politeness.host_budgets): rate derivation
+    stays a batch job on the fetch_state table, the stream only
+    METERS — the same
     batch-computes/stream-joins split as pagerank priorities."""
     src = urls.select("host", "url", "ts")
     per_host = budgets is not None

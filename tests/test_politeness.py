@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -23,24 +24,41 @@ def _frontier(spark, n=500, hosts=("hot", "a", "b"), hot_weight=8, seed=1):
               "priority double, discovered_wave int, status string")
 
 
-def test_matches_naive_window(spark):
+OVERRIDES = {"hot": 3, "a": 12}   # "b" keeps the default budget
+
+
+@pytest.mark.parametrize("overrides", ["none", "dict", "frame"])
+def test_matches_naive_window(spark, overrides):
+    # per-host budgets as a dict or as the equivalent (host, _budget)
+    # frame must admit and defer exactly the rows the naive global
+    # window does under the same budgets
     df = _frontier(spark).cache()
     budget = 10
-    admitted, deferred = politeness.admit(df, budget, salt=4)
+    per_host = {} if overrides == "none" else OVERRIDES
+    arg = {"none": None, "dict": OVERRIDES,
+           "frame": spark.createDataFrame(list(OVERRIDES.items()),
+                                          "host string, _budget int")
+           }[overrides]
+    admitted, deferred = politeness.admit(df, budget, salt=4,
+                                          budget_overrides=arg)
+    assert sorted(admitted.columns) == sorted(df.columns + ["rank"])
+    assert sorted(deferred.columns) == sorted(df.columns)
 
     w = Window.partitionBy("host").orderBy(F.col("priority").desc(),
                                            F.col("url").asc())
-    naive = (df.withColumn("rank", F.row_number().over(w))
-               .filter(F.col("rank") <= budget))
+    naive = df.withColumn("rank", F.row_number().over(w)).collect()
     got = {(r.host, r.rank, r.url) for r in admitted.collect()}
-    want = {(r.host, r.rank, r.url) for r in naive.collect()}
+    want = {(r.host, r.rank, r.url) for r in naive
+            if r.rank <= per_host.get(r.host, budget)}
     assert got == want
 
-    # deferred = complement, no overlap, nothing lost
-    n_adm, n_def, n_all = admitted.count(), deferred.count(), df.count()
-    assert n_adm + n_def == n_all
-    overlap = admitted.select("url").intersect(deferred.select("url")).count()
-    assert overlap == 0
+    # deferred = complement, row for row: no overlap, nothing lost
+    adm_urls = {u for _, _, u in got}
+    got_def = sorted(tuple(r) for r in
+                     deferred.select(*df.columns).collect())
+    want_def = sorted(tuple(r) for r in df.collect()
+                      if r.url not in adm_urls)
+    assert got_def == want_def
 
 
 def test_budget_respected_per_host(spark):

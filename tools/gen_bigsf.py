@@ -107,11 +107,11 @@ def gen_tpch(n_orders: int, n_cust: int, n_part: int, n_supp: int,
     n_li = int(n_orders * lines_per_order)
     okeys = rng.integers(0, n_orders, size=n_li)
     okeys.sort()
-    linenum = np.ones(n_li, dtype=np.int32)
+    # position within each run of equal order keys (0-based): index
+    # minus the index where the run started
     same = np.concatenate([[False], okeys[1:] == okeys[:-1]])
-    run = np.zeros(n_li, dtype=np.int32)
-    for i in range(1, n_li):
-        run[i] = run[i - 1] + 1 if same[i] else 0
+    idx = np.arange(n_li)
+    run = idx - np.maximum.accumulate(np.where(~same, idx, 0))
     linenum = (run % 7 + 1).astype(np.int32)
     ship_base = np.datetime64("1995-01-01", "us")
     ship_span = np.int64(2500) * 24 * 3600 * 1_000_000
@@ -170,7 +170,9 @@ def gen_tpch(n_orders: int, n_cust: int, n_part: int, n_supp: int,
 def main():
     out = sys.argv[1] if len(sys.argv) > 1 else "/root/sfbig"
     scale = float(sys.argv[2]) if len(sys.argv) > 2 else 1.0
-    m = scale / 0.1  # multiplier over the shipped sf0.1 rowcounts
+    # multiplier over the shipped sf0.1 rowcounts; rounded so that
+    # e.g. 0.3 gives 3.0, not 2.9999999999999996
+    m = round(scale / 0.1, 9)
     os.makedirs(out, exist_ok=True)
     rng = np.random.default_rng(20260822)
     sizes = dict(documents=int(5000 * m), embeddings=int(2000 * m),
