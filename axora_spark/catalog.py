@@ -18,6 +18,11 @@ module implements the same contract over parquet with JSON manifests:
 - read(snapshot_id=...) = time travel; the lineage table records the
   snapshot id per wave so a restart resumes from the last complete wave.
 
+Each snapshot records `n_rows` and `n_partitions` for its new data dir.
+`n_rows` is counted by the write itself (an observed metric on the
+written plan, `_write_data`), never by reading the files back;
+`n_partitions` is the number of part files the write left.
+
 If a real Iceberg catalog is on the classpath, the same call sites can be
 swapped to `spark.table`/`MERGE INTO` — the contract is identical.
 """
@@ -29,7 +34,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -83,14 +88,23 @@ class SnapshotCatalog:
         return self._load_meta(name)["snapshots"]
 
     # ---------- reads ----------
+    def snapshot(self, name: str, snapshot_id: int) -> dict:
+        """One snapshot's metadata (id, parent, op, dirs, n_rows,
+        n_partitions, ts)."""
+        return self._find(self._load_meta(name), snapshot_id)
+
+    @staticmethod
+    def _find(meta: dict, snapshot_id: int) -> dict:
+        for s in meta["snapshots"]:
+            if s["id"] == snapshot_id:
+                return s
+        raise ValueError(f"unknown snapshot {snapshot_id}")
+
     def _dirs_for(self, meta: dict, snapshot_id: int | None) -> list[str]:
         sid = meta["current"] if snapshot_id is None else snapshot_id
         if sid is None:
             return []
-        for s in meta["snapshots"]:
-            if s["id"] == sid:
-                return s["dirs"]
-        raise ValueError(f"unknown snapshot {snapshot_id}")
+        return self._find(meta, sid)["dirs"]
 
     def read(self, spark: SparkSession, name: str,
              snapshot_id: int | None = None) -> DataFrame:
@@ -123,9 +137,14 @@ class SnapshotCatalog:
     def _write_data(self, name: str, df: DataFrame) -> tuple[str, int, int]:
         sid_dir = os.path.join(self._table_dir(name), "data",
                                f"s{uuid.uuid4().hex[:12]}")
-        df.write.mode("overwrite").parquet(sid_dir)
-        # cheap row count from parquet footers (no second job over the plan)
-        n = df.sparkSession.read.parquet(sid_dir).count()
+        # the write's own job counts its rows (CollectMetrics), as an
+        # Iceberg writer records each data file's row count in the
+        # manifest; reading the new files back would add three jobs
+        # (schema inference, a count stage and its final stage)
+        obs = Observation()
+        (df.observe(obs, F.count(F.lit(1)).alias("n"))
+         .write.mode("overwrite").parquet(sid_dir))
+        n = obs.get["n"]
         n_parts = sum(1 for f in os.listdir(sid_dir) if f.startswith("part-"))
         return sid_dir, n, n_parts
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -96,6 +97,14 @@ def init_tables(catalog: SnapshotCatalog) -> None:
     catalog.create_table("ranks", schemas.RANKS)
     catalog.create_table("trap_state", schemas.TRAP_STATE)
     catalog.create_table("fetch_state", schemas.FETCH_STATE)
+
+
+def _lineage_entry(catalog: SnapshotCatalog, table: str,
+                   sid: int) -> tuple[str, int, int, int]:
+    """(table, snapshot id, n_rows, n_partitions) from the snapshot's own
+    metadata — the rows and part files that commit wrote."""
+    snap = catalog.snapshot(table, sid)
+    return table, sid, snap["n_rows"], snap["n_partitions"]
 
 
 def _record_lineage(spark: SparkSession, catalog: SnapshotCatalog, wave: int,
@@ -245,6 +254,28 @@ def _pagerank_priorities(spark: SparkSession, catalog: SnapshotCatalog,
     return out, sid_ranks
 
 
+def wave_metrics(wave: int, candidates: DataFrame, admitted: DataFrame,
+                 union: DataFrame, frontier: DataFrame) -> DataFrame:
+    """A5 — one METRICS row per host with candidates this wave. deduped
+    counts the rows of the discovered∪deferred `union` that did not reach
+    the persisted next `frontier` (U1 collapse, the seen anti-join and the
+    frontier gates). One grouped pass: each frame contributes a 1 to its
+    own tag column, so the four per-host counts are one aggregation."""
+    tags = {"candidates": candidates, "admitted": admitted,
+            "_pre": union, "_post": frontier}
+    tagged = reduce(DataFrame.unionByName, [
+        df.select("host", *[F.lit(int(t == tag)).alias(t) for t in tags])
+        for tag, df in tags.items()])
+    return (tagged.groupBy("host")
+            .agg(*[F.sum(t).alias(t) for t in tags])
+            .filter(F.col("candidates") > 0)
+            .select(F.lit(wave).alias("wave"), "host", "candidates",
+                    "admitted",
+                    (F.col("candidates") - F.col("admitted"))
+                    .alias("deferred"),
+                    (F.col("_pre") - F.col("_post")).alias("deduped")))
+
+
 def run_crawl(spark: SparkSession, catalog: SnapshotCatalog, cfg: CrawlConfig,
               corpus: DataFrame | None, resume: bool = False,
               stop_after_wave: int | None = None,
@@ -295,10 +326,8 @@ def run_crawl(spark: SparkSession, catalog: SnapshotCatalog, cfg: CrawlConfig,
         sid = catalog.overwrite(spark, "frontier", frontier)
         # wave -1 lineage row pins the SEEDED frontier so a crash inside
         # wave 0 (after its frontier overwrite) can still roll back to it
-        seed_meta = catalog.snapshots("frontier")[-1]
-        _record_lineage(spark, catalog, -1, [
-            ("frontier", sid, seed_meta["n_rows"],
-             seed_meta["n_partitions"])])
+        _record_lineage(spark, catalog, -1,
+                        [_lineage_entry(catalog, "frontier", sid)])
         state = {"next_wave": 0, "done": False, "seen_count": 0,
                  "admitted_count": 0}
         _save_state(catalog, state)
@@ -481,55 +510,24 @@ def run_crawl(spark: SparkSession, catalog: SnapshotCatalog, cfg: CrawlConfig,
                                         salt=cfg.hot_host_salt)
         sid_frontier = catalog.overwrite(spark, "frontier", nxt)
 
-        # A5 — metrics (per wave × host); deduped = rows removed from the
-        # discovered∪deferred union by U1 collapse + the seen anti-join
-        pre_by_host = union.groupBy("host").agg(
-            F.count("*").alias("_pre"))
-        post_by_host = (catalog.read(spark, "frontier").groupBy("host")
-                        .agg(F.count("*").alias("_post")))
-        dedup_by_host = (pre_by_host.join(post_by_host, "host", "left")
-                         .na.fill(0, ["_post"])
-                         .select("host",
-                                 (F.col("_pre") - F.col("_post"))
-                                 .alias("deduped")))
-        cand_by_host = candidates.groupBy("host").agg(
-            F.count("*").alias("candidates"))
-        adm_by_host = admitted.groupBy("host").agg(
-            F.count("*").alias("admitted"))
-        met = (cand_by_host.join(adm_by_host, "host", "left")
-               .join(dedup_by_host, "host", "left")
-               .na.fill(0, ["admitted", "deduped"])
-               .select(F.lit(wave).alias("wave"), "host", "candidates",
-                       "admitted",
-                       (F.col("candidates") - F.col("admitted")).alias("deferred"),
-                       F.col("deduped").cast("long")))
+        met = wave_metrics(wave, candidates, admitted, union,
+                           catalog.read(spark, "frontier"))
         sid_met = catalog.append(spark, "metrics", met)
-        union.unpersist()        # pre_by_host reads it until this commit
+        union.unpersist()        # the metrics pass reads it until this commit
 
-        frontier_meta = catalog.snapshots("frontier")[-1]
-        lineage_entries = [
-            ("admitted", sid_adm, n_admitted, 0),
-            ("seen", sid_seen, n_admitted, 0),
-            ("frontier", sid_frontier, frontier_meta["n_rows"],
-             frontier_meta["n_partitions"]),
-            ("metrics", sid_met, 0, 0),
-        ]
-        if sid_links is not None:
-            lineage_entries.append(("links", sid_links, 0, 0))
-        if sid_obs is not None:
-            lineage_entries.append(("fetch_state", sid_obs, 0, 0))
-        if sid_ranks is not None:
-            lineage_entries.append(("ranks", sid_ranks, 0, 0))
+        frontier_meta = catalog.snapshot("frontier", sid_frontier)
+        wave_sids = [("admitted", sid_adm), ("seen", sid_seen),
+                     ("frontier", sid_frontier), ("metrics", sid_met),
+                     ("links", sid_links), ("fetch_state", sid_obs),
+                     ("ranks", sid_ranks)]
         # content tables (written by the sink) join the rollback set so a
         # mid-wave crash can't duplicate documents/chunks/vectors on resume
-        for t in ("documents", "chunks", "vectors", "sigs", "dup_log"):
-            if catalog.table_exists(t):
-                cur = catalog.current_snapshot(t)
-                if cur is not None:
-                    snap = catalog.snapshots(t)[-1]
-                    lineage_entries.append(
-                        (t, cur, snap["n_rows"], snap["n_partitions"]))
-        _record_lineage(spark, catalog, wave, lineage_entries)
+        wave_sids += [(t, catalog.current_snapshot(t))
+                      for t in ("documents", "chunks", "vectors", "sigs",
+                                "dup_log") if catalog.table_exists(t)]
+        _record_lineage(spark, catalog, wave,
+                        [_lineage_entry(catalog, t, sid)
+                         for t, sid in wave_sids if sid is not None])
 
         run.seen_count += n_admitted
         run.admitted_count += n_admitted

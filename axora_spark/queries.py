@@ -13,6 +13,7 @@ each one is the same code path the crawl engine uses.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -35,14 +36,30 @@ from axora_spark.operators.passages import (duplicate_passages,
                                             excise_passages)
 
 
+@functools.lru_cache(maxsize=64)
+def _parquet_schema(spark: SparkSession, path: str, mtime_ns: int,
+                    size: int) -> T.StructType:
+    """The schema of the parquet file at `path` as it is now: a
+    schema-less read runs a one-task inference job every time, so it is
+    inferred once per file identity (realpath, st_mtime_ns, st_size); a
+    table rewritten in place gets a new identity and is inferred again."""
+    return spark.read.parquet(path).schema
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str,
        spread: bool = False) -> DataFrame:
-    """Read a driver table. spread=True repartitions to the session's
-    parallelism — the sandbox tables are single-row-group files (one scan
-    task), which would serialize CPU-heavy per-row expressions (hashing,
-    shingling) onto one core. At production scale scans have thousands of
-    splits and the repartition is a no-op-sized shuffle either way."""
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Read a driver table. Its schema is inferred on the first read of
+    the file and reused after (no Spark job). spread=True repartitions
+    to the session's parallelism — the sandbox tables are
+    single-row-group files (one scan task), which would serialize
+    CPU-heavy per-row expressions (hashing, shingling) onto one core. At
+    production scale scans have thousands of splits and the repartition
+    is a no-op-sized shuffle either way."""
+    path = f"{sf_dir}/{name}.parquet"
+    st = os.stat(path)
+    schema = _parquet_schema(spark, os.path.realpath(path), st.st_mtime_ns,
+                             st.st_size)
+    df = spark.read.schema(schema).parquet(path)
     if spread:
         n = spread if isinstance(spread, int) and spread is not True \
             else spark.sparkContext.defaultParallelism

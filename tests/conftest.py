@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+import uuid
 
 import pytest
 
@@ -20,3 +21,23 @@ def catalog():
     d = tempfile.mkdtemp(prefix="axora_wh_")
     yield SnapshotCatalog(d)
     shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """`run(fn)` calls fn() under a fresh job group and returns (its
+    result, the number of Spark jobs it started)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status store fills from the (asynchronous) listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return run

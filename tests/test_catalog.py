@@ -1,5 +1,10 @@
 from __future__ import annotations
 
+import os
+import threading
+
+import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 SCHEMA = T.StructType([
@@ -122,3 +127,101 @@ def test_expire_snapshots_bounds_disk(spark, catalog):
     # expired data dirs are gone from disk
     data_root = os.path.join(catalog.root, "t", "data")
     assert len(os.listdir(data_root)) == 1
+
+
+def _data_dirs(catalog, name):
+    return sorted(os.listdir(os.path.join(catalog.root, name, "data")))
+
+
+def _check_counts(catalog, name, sid, want_rows):
+    """The snapshot's n_rows / n_partitions equal the rows and part files
+    its new data dir really holds."""
+    import pyarrow.parquet as pq
+    snap = catalog.snapshot(name, sid)
+    new_dir = snap["dirs"][-1]
+    parts = [f for f in os.listdir(new_dir) if f.startswith("part-")]
+    assert snap["n_rows"] == want_rows
+    assert sum(pq.read_metadata(os.path.join(new_dir, f)).num_rows
+               for f in parts) == want_rows
+    assert snap["n_partitions"] == len(parts)
+
+
+def test_snapshot_n_rows_counts_committed_rows(spark, catalog):
+    catalog.create_table("t", SCHEMA)
+    rows = [(i, f"v{i}") for i in range(7)]
+    sid = catalog.append(spark, "t",
+                         spark.createDataFrame(rows, SCHEMA).repartition(3))
+    _check_counts(catalog, "t", sid, 7)
+    sid = catalog.overwrite(spark, "t",
+                            spark.createDataFrame(rows[:5], SCHEMA))
+    _check_counts(catalog, "t", sid, 5)
+    # merge: key 1 exists, key 9 arrives twice in the batch -> 2 new rows
+    sid = catalog.merge_insert_if_absent(
+        spark, "t", spark.createDataFrame(
+            [(1, "dup"), (9, "x"), (9, "y"), (10, "z")], SCHEMA), "k")
+    _check_counts(catalog, "t", sid, 2)
+    sid = catalog.compact(spark, "t", n_files=1)
+    _check_counts(catalog, "t", sid, 7)
+    assert catalog.snapshot("t", sid)["n_partitions"] == 1
+    # latest-wins upsert rewrites the table: 7 keys + 1 new
+    sid = catalog.merge_upsert_latest(
+        spark, "t", spark.createDataFrame(
+            [(0, "zz"), (0, "zzz"), (11, "n")], SCHEMA), "k", "v")
+    _check_counts(catalog, "t", sid, 8)
+    assert catalog.read(spark, "t").count() == 8
+
+
+_EMPTY_INPUTS = {
+    "createDataFrame": lambda spark, df: spark.createDataFrame([], SCHEMA),
+    "filter_lit_false": lambda spark, df: df.filter(F.lit(False)),
+    "filter_no_match": lambda spark, df: df.filter(F.col("k") > 100),
+    "limit_0": lambda spark, df: df.limit(0),
+    "anti_join_all": lambda spark, df: df.join(df.select("k"), "k",
+                                               "left_anti"),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_EMPTY_INPUTS))
+def test_empty_write_records_zero(spark, catalog, kind):
+    """An input with no rows still finishes its observed count: the
+    commit records 0 (a write whose plan never reports the metric would
+    block in `Observation.get`)."""
+    catalog.create_table("t", SCHEMA)
+    src = spark.createDataFrame([(1, "a"), (2, "b")], SCHEMA)
+    empty = _EMPTY_INPUTS[kind](spark, src)
+    out = {}
+    worker = threading.Thread(
+        target=lambda: out.update(
+            sid=catalog.append(spark, "t", empty)), daemon=True)
+    worker.start()
+    worker.join(120)
+    assert not worker.is_alive(), f"{kind}: append did not finish"
+    assert catalog.snapshot("t", out["sid"])["n_rows"] == 0
+    assert catalog.read(spark, "t").count() == 0
+
+
+def test_merge_of_existing_keys_commits_nothing(spark, catalog):
+    catalog.create_table("t", SCHEMA)
+    sid = catalog.append(spark, "t", spark.createDataFrame(
+        [(1, "a"), (2, "b")], SCHEMA))
+    dirs = _data_dirs(catalog, "t")
+    got = catalog.merge_insert_if_absent(
+        spark, "t", spark.createDataFrame([(2, "x"), (1, "y")], SCHEMA), "k")
+    assert got == sid
+    assert [s["id"] for s in catalog.snapshots("t")] == [sid]
+    assert _data_dirs(catalog, "t") == dirs
+
+
+def test_append_of_cached_frame_is_one_job(spark, catalog, count_jobs):
+    """The write's own job counts the rows: no read-back of the new
+    files (schema inference + count)."""
+    catalog.create_table("t", SCHEMA)
+    df = spark.createDataFrame([(i, "v") for i in range(50)],
+                               SCHEMA).persist()
+    try:
+        df.count()
+        sid, jobs = count_jobs(lambda: catalog.append(spark, "t", df))
+    finally:
+        df.unpersist()
+    assert jobs == 1
+    assert catalog.snapshot("t", sid)["n_rows"] == 50

@@ -519,3 +519,53 @@ def test_neardup_incremental_single_signature_pass(spark):
     plan = _physical(q_neardup_incremental(spark, SF))
     assert plan.count("Scan parquet") == 0
     assert "ExistingRDD" in plan
+
+
+# Spark jobs per admitting wave of the seed-42 fixture crawl (raw HTML,
+# content sink): 30 since catalog commits count rows on the write and
+# the wave metrics are one aggregation (58 with a read-back per commit)
+WAVE_JOB_CEILING = 30
+
+
+def test_admitting_wave_job_ceiling(spark, catalog, monkeypatch):
+    """Fixed wave cost gate: a frame re-evaluated by a second consumer
+    or a commit that reads its files back adds jobs to every wave. Each
+    wave's jobs are counted in their own job group, switched when the
+    wave's lineage row is committed (a wave ends there)."""
+    import uuid
+
+    from axora_spark import datagen, schemas
+    from axora_spark.plans import content, crawl
+    sc = spark.sparkContext
+    groups = []
+
+    def next_group(wave):
+        groups.append((wave, f"wave-{wave}-{uuid.uuid4().hex}"))
+        sc.setJobGroup(groups[-1][1], groups[-1][1])
+
+    record = crawl._record_lineage
+
+    def record_then_switch(spark_, catalog_, wave, entries):
+        record(spark_, catalog_, wave, entries)
+        next_group(wave + 1)
+
+    monkeypatch.setattr(crawl, "_record_lineage", record_then_switch)
+    pages = datagen.link_graph_rows(120, 42)
+    cfg = datagen.fixture_config(pages)
+    corpus = spark.createDataFrame(
+        [{"url": r["url"], "host": r["host"],
+          "body_html": datagen.render_page_html(r)} for r in pages],
+        schemas.HTML_GRAPH)
+    next_group(-1)
+    try:
+        run = crawl.run_crawl(spark, catalog, cfg, corpus,
+                              content_sink=content.make_content_sink(cfg))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = {w: len(tracker.getJobIdsForGroup(g)) for w, g in groups
+            if 0 <= w < run.waves_run}
+    assert len(jobs) == run.waves_run > 1
+    assert max(jobs.values()) <= WAVE_JOB_CEILING, jobs

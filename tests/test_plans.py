@@ -109,3 +109,25 @@ def test_plans_md_fresh_at_head():
     m = re.search(r"Source-hash: ([0-9a-f]{16})", text)
     assert m and m.group(1) == want, \
         "PLANS.md stale — rerun tools/dump_plans.py"
+
+
+def test_driver_table_schema_inferred_once(spark, count_jobs, tmp_path):
+    """queries._t infers a table's schema on the first read of the file
+    and reuses it after (no Spark job); a table rewritten at the same
+    path is inferred again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from axora_spark.queries import _t
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": [1, 2], "v": ["a", "b"]}), path)
+    _, first = count_jobs(lambda: _t(spark, str(tmp_path), "t"))
+    assert first >= 1                      # the inference job
+    df, again = count_jobs(lambda: _t(spark, str(tmp_path), "t"))
+    assert again == 0
+    assert sorted(df.columns) == ["k", "v"]
+
+    pq.write_table(pa.table({"k": [3], "w": [1.5], "x": [True]}), path)
+    df, rewritten = count_jobs(lambda: _t(spark, str(tmp_path), "t"))
+    assert rewritten >= 1
+    assert [tuple(r) for r in df.collect()] == [(3, 1.5, True)]
